@@ -93,25 +93,6 @@ def _k(part: AggregationPart) -> int:
     return int(part.arg_map.get("k", 1))
 
 
-def _interp_percentile(sorted_arr: str, p: float) -> str:
-    """Linear-interpolated percentile over a sorted array — same definition
-    as numpy/np.percentile, Spark's exact `percentile`, DuckDB
-    quantile_cont. The reference returns KLL-sketch approximations
-    (SimpleAggregators.scala:762-802); parity tests use allclose so the
-    exact value is an acceptable (stronger) stand-in; a sketch path can
-    swap in per-hop KLL merges later."""
-    n = f"size({sorted_arr})"
-    idx = f"({p} * ({n} - 1))"
-    lo = f"CAST(floor({idx}) AS INT)"
-    hi = f"CAST(ceil({idx}) AS INT)"
-    frac = f"({idx} - floor({idx}))"
-    return (
-        f"CASE WHEN {n} > 0 THEN "
-        f"element_at({sorted_arr}, {lo} + 1) * (1.0 - {frac}) + "
-        f"element_at({sorted_arr}, {hi} + 1) * {frac} END"
-    )
-
-
 def _moments_finalize(ir: str, op: Operation) -> Column:
     """Finalize (n, s1..s4) power sums.
 
@@ -246,10 +227,6 @@ def _hist_finalize(list_col: str, part: AggregationPart) -> Column:
 
 
 # ---------------------------------------------------------------- specs
-
-
-def _collect_merge(ir: str) -> WindowMerge:
-    return _wm(lambda w: F.flatten(F.collect_list(ir).over(w)))
 
 
 def _sorted_struct_list(inp: str, asc: bool, limit: int | None, by_value: bool) -> str:

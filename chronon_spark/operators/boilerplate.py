@@ -124,40 +124,50 @@ def remove_boilerplate_lines(
     )
 
     def _clean(batches):
-        import numpy as np
-        import pyarrow.compute as pc
-
         vs = pa.array(bset.value, type=pa.string())
         for b in batches:
-            lists = b.column(b.schema.get_field_index(PARTS))
-            if isinstance(lists, pa.ChunkedArray):  # defensive; batches are flat
-                lists = lists.combine_chunks()
-            null_mask = pc.is_null(lists).to_numpy(zero_copy_only=False)
-            offsets = lists.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = lists.values
-            keep = pc.fill_null(pc.invert(pc.is_in(flat, value_set=vs)), True)
-            kb = keep.to_numpy(zero_copy_only=False).astype(np.int64)
-            cum = np.concatenate([[0], np.cumsum(kb)])
-            new_off = cum[offsets - offsets[0]]
-            kept_arr = pa.ListArray.from_arrays(
-                pa.array(new_off, type=pa.int32()), flat.filter(keep)
-            )
-            joined = pc.binary_join(kept_arr, sep)
-            nrem = (np.diff(offsets) - np.diff(new_off)).astype(np.int32)
-            nrem_arr = pa.array(nrem, type=pa.int32())
-            if null_mask.any():
-                # null text: null cleaned text, 0 removed — same as the
-                # literal path's array_join(null)/size(null) algebra
-                valid = pa.array(~null_mask)
-                joined = pc.if_else(valid, joined, pa.nulls(len(null_mask), pa.string()))
-                nrem_arr = pc.if_else(valid, nrem_arr, pa.scalar(0, pa.int32()))
-            cols = [b.column(b.schema.get_field_index(n)) for n in out_names]
-            yield pa.RecordBatch.from_arrays(
-                cols + [joined, nrem_arr], out_names + [out_col, "n_lines_removed"]
-            )
+            yield _clean_batch(b, vs, sep, PARTS, out_names, out_col)
 
     out = src.mapInArrow(_clean, out_schema)
     # withColumn semantics: an out_col that replaces an existing column
     # keeps its original position, a new one lands at the end
     final_cols = docs.columns if out_col in docs.columns else docs.columns + [out_col]
     return out.select(*final_cols, "n_lines_removed")
+
+
+def _clean_batch(b, vs, sep: str, parts_col: str, out_names: list, out_col: str):
+    """One Arrow batch of the large-set path: drop the lines in ``vs``
+    from each ``parts_col`` list, rejoin them with ``sep`` into
+    ``out_col`` and count the removed lines."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    lists = b.column(b.schema.get_field_index(parts_col))
+    if isinstance(lists, pa.ChunkedArray):  # defensive; batches are flat
+        lists = lists.combine_chunks()
+    null_mask = pc.is_null(lists).to_numpy(zero_copy_only=False)
+    offsets = lists.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    # a sliced list array's offsets index into the WHOLE child buffer
+    # (``values`` ignores the slice): take the span they cover, rebased
+    flat = lists.values.slice(offsets[0], offsets[-1] - offsets[0])
+    keep = pc.fill_null(pc.invert(pc.is_in(flat, value_set=vs)), True)
+    kb = keep.to_numpy(zero_copy_only=False).astype(np.int64)
+    cum = np.concatenate([[0], np.cumsum(kb)])
+    new_off = cum[offsets - offsets[0]]
+    kept_arr = pa.ListArray.from_arrays(
+        pa.array(new_off, type=pa.int32()), flat.filter(keep)
+    )
+    joined = pc.binary_join(kept_arr, sep)
+    nrem = (np.diff(offsets) - np.diff(new_off)).astype(np.int32)
+    nrem_arr = pa.array(nrem, type=pa.int32())
+    if null_mask.any():
+        # null text: null cleaned text, 0 removed — same as the
+        # literal path's array_join(null)/size(null) algebra
+        valid = pa.array(~null_mask)
+        joined = pc.if_else(valid, joined, pa.nulls(len(null_mask), pa.string()))
+        nrem_arr = pc.if_else(valid, nrem_arr, pa.scalar(0, pa.int32()))
+    cols = [b.column(b.schema.get_field_index(n)) for n in out_names]
+    return pa.RecordBatch.from_arrays(
+        cols + [joined, nrem_arr], out_names + [out_col, "n_lines_removed"]
+    )

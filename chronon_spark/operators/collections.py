@@ -24,20 +24,6 @@ from chronon_spark.api.types import AggregationPart, Operation
 from chronon_spark.functions.aggregations import DIRECT_NEEDS_FINALIZE, _let_sql, spec_for
 
 
-def pos_map_to_array(map_expr: str) -> str:
-    """Map[str(position) → value] ⇒ dense array sized to max(PRESENT
-    position)+1, missing interior positions null. Fallback finalizer for
-    element_wise outputs when no observed tensor size is available —
-    TRAILING all-null positions are dropped. Prefer
-    ``pos_map_to_array_sized``, which matches the reference contract."""
-    body = (
-        "CASE WHEN __m IS NOT NULL AND size(__m) > 0 THEN "
-        "transform(sequence(0, array_max(transform(map_keys(__m), k -> CAST(k AS INT)))), "
-        "i -> element_at(__m, CAST(i AS STRING))) END"
-    )
-    return _let_sql(map_expr, "__m", body)
-
-
 def pos_map_to_array_sized(map_expr: str, size_expr: str) -> str:
     """Map[str(position) → value] ⇒ dense array null-padded to the
     OBSERVED tensor size (max in-window/in-group array length, threaded

@@ -45,13 +45,18 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     aggregation — duplicate rows collapse before the exchange, so the
     shuffle moves one candidate row per (partition, hash) instead of
     every row — and needs no per-partition sort. The window form shipped
-    the full corpus through the exchange and sorted each partition."""
+    the full corpus through the exchange and sorted each partition.
+
+    The ordering key (id is null, id) ranks every non-null id first and
+    is itself never null, so a cluster whose ids are ALL null still
+    emits one of its real rows (min_by skips null ordering keys)."""
     cols = df.columns
+    id_key = F.struct(F.col(id_col).isNull(), F.col(id_col))
     agg = (
         df.withColumn("__th", F.md5(normalize_text(text_col)))
         .groupBy("__th")
         .agg(
-            F.min_by(F.struct(*cols), F.col(id_col)).alias("__row"),
+            F.min_by(F.struct(*cols), id_key).alias("__row"),
             F.count("*").alias("dup_count"),
         )
     )

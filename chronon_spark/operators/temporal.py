@@ -11,14 +11,19 @@ Events at exactly ``ts == qt`` are EXCLUDED (zero-leakage invariant,
 SawtoothAggregator.scala:108-115). Unbounded windows cover ``(-inf, qt)``.
 
 Execution: instead of the reference's three RDD cogroups keyed by
-(murmur_hash(keys), headStart) (spark/GroupBy.scala:279-358), we run ONE
-DataFrame cogroup per key over (queries × events) and evaluate every
-query's aggregate with vectorized numpy inside an Arrow-batched
-``applyInPandas`` kernel:
+(murmur_hash(keys), headStart) (spark/GroupBy.scala:279-358), queries and
+events are unioned into ONE tagged frame, hash-partitioned on the keys
+and sorted by (keys, ts), and a ``mapInArrow`` kernel evaluates every
+query of every key in an Arrow batch with vectorized numpy. The kernel
+cuts the sorted stream into key segments and finds every query's event
+range [lo, hi) with one ``np.searchsorted`` over a composite (segment,
+ts-rank) key, so per-key costs (frame build, sort, dispatch, Arrow round
+trip) are paid once per batch, not once per key. Python holds one batch
+plus the rows of the key that straddles the batch boundary.
 
 - invertible ops (count/sum/average/variance/skew/kurtosis) are prefix-sum
-  lookups: two ``np.searchsorted`` calls per (part, query-batch) — O((E+Q)·logE)
-  per key, no per-row Python;
+  lookups (float sums restart per key) — O((E+Q)·logE) per batch, no
+  per-row Python;
 - min/max use an O(E log E) sparse table with O(1) vectorized range lookups;
 - first/last are index lookups on the non-null event index;
 - list/map-valued ops (last_k/top_k/percentile/histogram/unique) slice the
@@ -26,20 +31,24 @@ query's aggregate with vectorized numpy inside an Arrow-batched
 
 This is the same asymptotic shape as the reference's TwoStackLite
 (windowing/TwoStackLiteAggregator.scala:26-120) but batch-vectorized.
-Skew note: one key's events land in one Arrow batch, so this RAW kernel
-is the exact-but-small-key path; ``mode="auto"`` routes every tileable
-GroupBy (now including the whole collection family) to operators/
-tiled.py, whose hop pre-tiling compresses a hot key to per-tile IRs
-before the cogroup (measured 6.8× at a 1.5M-event key, BENCH §8).
+Skew note: one key's events sit in one task, so this RAW kernel is the
+exact-but-small-key path; hot keys time-slice (``hot_key_threshold``),
+and ``mode="auto"`` routes every tileable GroupBy (now including the
+whole collection family) to operators/tiled.py, whose hop pre-tiling
+compresses a hot key to per-tile IRs (measured 6.8× at a 1.5M-event
+key, BENCH §8).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from chronon_spark.api.types import AggregationPart, GroupBy, Operation
 from chronon_spark.functions.sketches import HLL_M, hll_estimate, hll_idx_rho_exprs
@@ -127,51 +136,68 @@ class _SparseTable:
 
 
 class _EventCol:
-    """Per-input-column precomputation shared across parts/windows."""
+    """Per-input-column precomputation shared across parts/windows, built
+    from the Arrow column of one batch's event rows.
+
+    ``seg`` (one id per event, non-decreasing) marks where one key's
+    events end and the next key's begin; every query range lies inside
+    one segment. Counts, int64 sums and the min/max tables are exact over
+    the whole batch, but float prefix sums restart at every segment, so a
+    key's rounding depends on its own values only."""
 
     def __init__(
         self,
-        series: pd.Series,
+        arr: pa.Array,
         numeric: bool,
         integral: bool = False,
         ts: "np.ndarray | None" = None,
+        seg: "np.ndarray | None" = None,
     ):
         self.numeric = numeric
         self.integral = integral
         self._ts = ts
+        self._seg = seg
+        # ordinal of each event's segment among the segments that HAVE
+        # events: the shift into the gapped index space of _seg_prefix
+        self._eseg = (
+            None
+            if seg is None or len(seg) == 0
+            else np.concatenate(([0], np.cumsum(np.diff(seg) != 0)))
+        )
         self._tie_compact = None
+        self._inf = None
         if numeric:
-            vals = pd.to_numeric(series, errors="coerce").to_numpy(dtype=np.float64)
+            vals = arr.cast(pa.float64(), safe=False).to_numpy(zero_copy_only=False)
             self.mask = ~np.isnan(vals)
             self.vals = vals
+            inf = np.isinf(vals)
+            if inf.any():
+                # float sums run over the finite values; per-range ±inf
+                # counts then decide inf / -inf / NaN, so an inf event
+                # never poisons a later window that excludes it
+                self._inf = (_prefix(vals == np.inf), _prefix(vals == -np.inf))
+            self._finite = np.where(self.mask & ~inf, vals, 0.0)
             if integral:
                 # exact long SUM: int64 prefix sums (running totals beyond
                 # 2^53 stay exact — same contract as the tiled kernel's
-                # int64 tile-prefix, tiled.py _TilePrefix). Values arrive
-                # int64-exact from Arrow when the column has no nulls.
-                if pd.api.types.is_integer_dtype(series.dtype):
-                    ivals = series.to_numpy(dtype=np.int64)
-                else:
-                    ivals = np.nan_to_num(vals, nan=0.0).astype(np.int64)
+                # int64 tile-prefix, tiled.py _TilePrefix)
+                ivals = pc.fill_null(arr.cast(pa.int64()), 0).to_numpy()
                 self._ipsum = np.empty(len(ivals) + 1, dtype=np.int64)
                 self._ipsum[0] = 0
-                np.cumsum(np.where(self.mask, ivals, 0), out=self._ipsum[1:])
+                np.cumsum(ivals, out=self._ipsum[1:])
         else:
-            self.raw = series.to_numpy(dtype=object)
-            self.mask = np.array([v is not None and v == v for v in self.raw], dtype=bool)
+            raw = arr.to_numpy(zero_copy_only=False)
+            self.raw = raw if raw.dtype == object else raw.astype(object)
+            self.mask = arr.is_valid().to_numpy(zero_copy_only=False)
             self.vals = None
         self.pcount = _prefix(self.mask.astype(np.float64))
-        # compacted (non-null) values in ts order + their original indices
+        # compacted (non-null) values in (segment, ts) order + their indices
         self.nn_idx = np.flatnonzero(self.mask)
-        if numeric:
-            self.compact = self.vals[self.nn_idx]
-        else:
-            self.compact = self.raw[self.nn_idx]
+        self.compact = (self.vals if numeric else self.raw)[self.nn_idx]
         self._psum = None
         self._pmoments = None
         self._tmin = None
         self._tmax = None
-        self._sorted_compact_cache = None
 
     @property
     def tie_compact(self) -> np.ndarray:
@@ -179,9 +205,9 @@ class _EventCol:
         — the tiled kernel's (ts, value) struct-sort tie-break, shared so
         FIRST/LAST/FIRST_K/LAST_K pick the SAME element on exact-tie
         timestamps in both execution paths (the order the gate oracle
-        asserts). Window bounds always fall on ts-run boundaries, so the
-        reorder is invisible to every other op. Falls back to input order
-        when the constructor got no ts array."""
+        asserts). Window bounds always fall on (segment, ts)-run
+        boundaries, so the reorder is invisible to every other op. Falls
+        back to input order when the constructor got no ts array."""
         if self._ts is None:
             return self.compact
         if self._tie_compact is None:
@@ -193,8 +219,10 @@ class _EventCol:
                 # UTF8 ordering agrees with Python's for the practical
                 # string/categorical cases; compact is already non-null)
                 key = np.array([str(v) for v in vals], dtype=object)
-            order = np.lexsort((key, self._ts[self.nn_idx]))
-            self._tie_compact = vals[order]
+            order_keys = (key, self._ts[self.nn_idx])
+            if self._seg is not None:
+                order_keys += (self._seg[self.nn_idx],)
+            self._tie_compact = vals[np.lexsort(order_keys)]
         return self._tie_compact
 
     def count_in(self, lo, hi):
@@ -206,18 +234,62 @@ class _EventCol:
         chi = (self.pcount[hi]).astype(np.int64)
         return clo, chi
 
+    def _seg_prefix(self, z: np.ndarray) -> np.ndarray:
+        """Exclusive prefix sums of ``z`` restarted at every segment, in a
+        gapped index space: event i of the s-th segment sits at i + s, so
+        each segment owns its own leading zero (see _range)."""
+        if self._eseg is None:
+            return _prefix(z)
+        cuts = np.flatnonzero(np.diff(self._eseg)) + 1
+        out = np.zeros(len(z) + len(cuts) + 1, dtype=np.float64)
+        for s, (a, b) in enumerate(zip(np.r_[0, cuts], np.r_[cuts, len(z)])):
+            np.cumsum(z[a:b], out=out[a + s + 1 : b + s + 1])
+        return out
+
+    def _range(self, p: np.ndarray, lo, hi) -> np.ndarray:
+        """Per-range difference of a _seg_prefix array: both bounds shift
+        by the segment of the range's first event (an empty range reads
+        zero whatever the shift)."""
+        if self._eseg is None:
+            return p[hi] - p[lo]
+        s = self._eseg[np.minimum(lo, len(self._eseg) - 1)]
+        return p[hi + s] - p[lo + s]
+
+    def _inf_counts(self, lo, hi):
+        pi, ni = self._inf
+        return pi[hi] - pi[lo], ni[hi] - ni[lo]
+
+    def fsum(self, lo, hi) -> np.ndarray:
+        """Float sum of the non-null values in each range [lo, hi)."""
+        s = self._range(self.psum, lo, hi)
+        if self._inf is None:
+            return s
+        pos, neg = self._inf_counts(lo, hi)
+        return np.where(
+            pos > 0, np.where(neg > 0, np.nan, np.inf), np.where(neg > 0, -np.inf, s)
+        )
+
+    def moments(self, lo, hi):
+        """Power sums (s1, s2, s3, s4) per range; NaN where a range holds
+        ±inf (every moment of such a range is undefined)."""
+        p2, p3, p4 = self.pmoments
+        out = [self._range(p, lo, hi) for p in (self.psum, p2, p3, p4)]
+        if self._inf is not None:
+            pos, neg = self._inf_counts(lo, hi)
+            bad = (pos + neg) > 0
+            out = [np.where(bad, np.nan, x) for x in out]
+        return out
+
     @property
     def psum(self):
         if self._psum is None:
-            z = np.where(self.mask, self.vals, 0.0)
-            self._psum = _prefix(z)
+            self._psum = self._seg_prefix(self._finite)
         return self._psum
 
     @property
     def pmoments(self):
         if self._pmoments is None:
-            z = np.where(self.mask, self.vals, 0.0)
-            self._pmoments = tuple(_prefix(z**i) for i in (2, 3, 4))
+            self._pmoments = tuple(self._seg_prefix(self._finite**i) for i in (2, 3, 4))
         return self._pmoments
 
     def tmin(self):
@@ -256,19 +328,15 @@ def _compute_part(
         if col.integral:
             s = col._ipsum[hi] - col._ipsum[lo]
             return _obj([int(x) for x in s], has)
-        s = col.psum[hi] - col.psum[lo]
+        s = col.fsum(lo, hi)
         return _obj([float(x) for x in s], has)
     if op is Operation.AVERAGE:
-        s = col.psum[hi] - col.psum[lo]
+        s = col.fsum(lo, hi)
         return _obj([s[i] / cnt[i] if cnt[i] else None for i in range(len(cnt))], has)
     if op in (Operation.VARIANCE, Operation.SKEW, Operation.KURTOSIS):
-        p2, p3, p4 = col.pmoments
+        s1, s2, s3, s4 = col.moments(lo, hi)
         n = cnt.astype(np.float64)
         with np.errstate(divide="ignore", invalid="ignore"):
-            s1 = col.psum[hi] - col.psum[lo]
-            s2 = p2[hi] - p2[lo]
-            s3 = p3[hi] - p3[lo]
-            s4 = p4[hi] - p4[lo]
             m1 = s1 / n
             m2 = s2 / n - m1**2
             m3 = s3 / n - 3 * m1 * s2 / n + 2 * m1**3
@@ -283,10 +351,10 @@ def _compute_part(
         return _obj([float(v) for v in out], has)
     if op is Operation.MIN and col.numeric:
         v = col.tmin().query(lo, hi)
-        return _obj([float(x) for x in v], has & np.isfinite(v))
+        return _obj([float(x) for x in v], has)
     if op is Operation.MAX and col.numeric:
         v = col.tmax().query(lo, hi)
-        return _obj([float(x) for x in v], has & np.isfinite(v))
+        return _obj([float(x) for x in v], has)
 
     # compacted-range ops (and string min/max fallback)
     clo, chi = col.compact_range(lo, hi)
@@ -418,7 +486,7 @@ def _merge_unbounded(
         if col.integral and not empty:
             s = col._ipsum[hi] - col._ipsum[lo] + (0 if bs is None else int(bs))
             return _obj([int(x) for x in s], has)
-        within = np.zeros(nq) if empty else col.psum[hi] - col.psum[lo]
+        within = np.zeros(nq) if empty else col.fsum(lo, hi)
         if col.integral:  # integral column, no within events
             s = within + (0 if bs is None else int(bs))
             return _obj([int(x) for x in s], has)
@@ -427,7 +495,7 @@ def _merge_unbounded(
     if op is Operation.AVERAGE:
         bs = float(_nn(base.get("s1")) or 0.0)
         total = cnt + bn
-        within = np.zeros(nq) if empty else col.psum[hi] - col.psum[lo]
+        within = np.zeros(nq) if empty else col.fsum(lo, hi)
         s = within + bs
         return _obj(
             [s[i] / total[i] if total[i] else None for i in range(nq)], total > 0
@@ -444,11 +512,8 @@ def _merge_unbounded(
             s3 = np.full(nq, b3)
             s4 = np.full(nq, b4)
         else:
-            p2, p3, p4 = col.pmoments
-            s1 = col.psum[hi] - col.psum[lo] + b1
-            s2 = p2[hi] - p2[lo] + b2
-            s3 = p3[hi] - p3[lo] + b3
-            s4 = p4[hi] - p4[lo] + b4
+            w1, w2, w3, w4 = col.moments(lo, hi)
+            s1, s2, s3, s4 = w1 + b1, w2 + b2, w3 + b3, w4 + b4
         with np.errstate(divide="ignore", invalid="ignore"):
             m1 = s1 / n
             m2 = s2 / n - m1**2
@@ -476,7 +541,7 @@ def _merge_unbounded(
                 if op is Operation.MIN
                 else np.maximum(within, float(bm))
             )
-        return _obj([float(x) for x in within], np.isfinite(within))
+        return _obj([float(x) for x in within], (cnt > 0) | (bm is not None))
 
     # gather family: compact-range merges with baseline lists/picks
     if empty:
@@ -636,18 +701,17 @@ def _cast_feature(out_vals: np.ndarray, part: AggregationPart, input_type: T.Dat
     return out_vals
 
 
-def _parse_bucketed_base(qdf: pd.DataFrame, mapping: dict) -> dict:
+def _parse_bucketed_base(row: dict, mapping: dict) -> dict:
     """Per-bucket baseline state dicts from the parallel-array columns
-    _build_baselines assembles for a bucketed unbounded part: scalar
-    states aligned to the bucket-label array, list states as (lengths,
-    flat values) pairs. Returns {bucket label: {skey: value}}."""
-    def _cell(name):
-        return qdf[name].iloc[0] if name in qdf.columns else None
+    _build_baselines assembles for a bucketed unbounded part (``row``:
+    the sliced segment's query-side column values): scalar states aligned
+    to the bucket-label array, list states as (lengths, flat values)
+    pairs. Returns {bucket label: {skey: value}}."""
 
     def _isna(v):
         return v is None or (isinstance(v, float) and v != v)
 
-    bks = _cell(mapping["__bk"])
+    bks = row.get(mapping["__bk"])
     if _isna(bks):
         return {}
     bks = list(bks)
@@ -656,7 +720,7 @@ def _parse_bucketed_base(qdf: pd.DataFrame, mapping: dict) -> dict:
         if skey == "__bk":
             continue
         if skey in _LIST_SKEYS:
-            ln, fl = _cell(f"{name}_l"), _cell(f"{name}_f")
+            ln, fl = row.get(f"{name}_l"), row.get(f"{name}_f")
             lens = [0] * len(bks) if _isna(ln) else [int(x) for x in ln]
             flat = [] if _isna(fl) else list(fl)
             off = 0
@@ -664,253 +728,339 @@ def _parse_bucketed_base(qdf: pd.DataFrame, mapping: dict) -> dict:
                 per[t][skey] = flat[off : off + L]
                 off += L
         else:
-            arr = _cell(name)
+            arr = row.get(name)
             vals = None if _isna(arr) else list(arr)
             for t in range(len(bks)):
                 per[t][skey] = None if vals is None else vals[t]
     return {str(b): d for b, d in zip(bks, per)}
 
 
+# ------------------------------------------------------------------ batch stream
+#
+# The kernel input is ONE frame: query and event rows tagged by _EV_TAG,
+# sharing the (co_keys, ts) columns, event value columns renamed with
+# _EV_PREFIX so they never collide with query passthrough columns, and
+# hash-partitioned + sorted by (co_keys, ts). A key's rows are therefore
+# contiguous (a "segment") and time-ordered, and one numpy pass evaluates
+# every query of every segment in an Arrow batch.
+
+_EV_TAG = "__is_ev"
+_EV_PREFIX = "__ev_"
+
+
+def _flat(col) -> pa.Array:
+    """One contiguous Array from a table column."""
+    if not isinstance(col, pa.ChunkedArray):
+        return col
+    return col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+
+
+def _differs(a: pa.Array, b: pa.Array) -> np.ndarray:
+    """Element-wise key inequality with grouping semantics: null equals
+    null and NaN equals NaN."""
+    ne = pc.not_equal(a, b)
+    if pa.types.is_floating(a.type):
+        ne = pc.and_(ne, pc.invert(pc.and_(pc.is_nan(a), pc.is_nan(b))))
+    ne = pc.fill_null(ne, False).to_numpy(zero_copy_only=False)
+    an = a.is_null().to_numpy(zero_copy_only=False)
+    return ne | (an != b.is_null().to_numpy(zero_copy_only=False))
+
+
+def _segment_starts(rows, keys: list[str], prev=None) -> np.ndarray:
+    """True where a row's key differs from the row before it; ``prev`` is
+    the one row preceding ``rows`` (None: the first row starts a segment)."""
+    n = rows.num_rows
+    starts = np.zeros(n, dtype=bool)
+    starts[0] = prev is None
+    for k in keys:
+        a = _flat(rows.column(k))
+        starts[1:] |= _differs(a.slice(1), a.slice(0, n - 1))
+        if prev is not None:
+            starts[:1] |= _differs(a.slice(0, 1), _flat(prev.column(k)))
+    return starts
+
+
+class _Events:
+    """Event rows of one batch (or a subset of them) in (segment, ts)
+    order: Arrow columns under their event-side names, the segment id and
+    the composite (segment, ts-rank) sort key of every row."""
+
+    def __init__(self, table: pa.Table, seg: np.ndarray, key: np.ndarray, kinds: dict):
+        self.table = table
+        self.seg = seg
+        self.key = key
+        self.ts = _flat(table.column(TS_COL)).to_numpy(zero_copy_only=False)
+        self._kinds = kinds  # column → (numeric, integral)
+        self._cols: dict[str, _EventCol] = {}
+
+    def array(self, name: str) -> pa.Array:
+        return _flat(self.table.column(name))
+
+    def col(self, name: str) -> _EventCol:
+        if name not in self._cols:
+            numeric, integral = self._kinds[name]
+            self._cols[name] = _EventCol(
+                self.array(name), numeric, integral, ts=self.ts, seg=self.seg
+            )
+        return self._cols[name]
+
+    def take(self, idx: np.ndarray) -> "_Events":
+        return _Events(self.table.take(idx), self.seg[idx], self.key[idx], self._kinds)
+
+    def groups(self, bcol: str) -> "dict[str, _Events]":
+        """Per bucket value (its string form, sorted), the events carrying
+        it; null and NaN buckets belong to none."""
+        arr = self.array(bcol)
+        valid = arr.is_valid().to_numpy(zero_copy_only=False)
+        if pa.types.is_floating(arr.type):
+            valid &= ~pc.fill_null(pc.is_nan(arr), True).to_numpy(zero_copy_only=False)
+        enc = arr.dictionary_encode()
+        codes = pc.fill_null(enc.indices, -1).to_numpy(zero_copy_only=False)
+        labels = [str(v) for v in enc.dictionary.to_pylist()]
+        out = {}
+        for j in sorted(range(len(labels)), key=labels.__getitem__):
+            idx = np.flatnonzero((codes == j) & valid)
+            if len(idx):
+                out[labels[j]] = self.take(idx)
+        return out
+
+
+def _hll_eval(ev: _Events, name: str, lo: np.ndarray, hi: np.ndarray, base_entries=None):
+    """APPROX_UNIQUE_COUNT via the shared HLL register sketch: JVM-hashed
+    (idx, rho) per event (null-guarded), register max over each query's
+    event range — the SAME estimator the tiled kernel stitches from tile
+    maps (functions/sketches.py).
+
+    ``base_entries``: sliced hot key — sparse (i, r) register entries
+    covering every event before the slice; register max is associative,
+    so merging them with the local range reproduces the unsliced estimate
+    bit-identically."""
+    idx = ev.array(f"__hh_{name}_idx").cast(pa.float64()).to_numpy(zero_copy_only=False)
+    rho = ev.array(f"__hh_{name}_rho").cast(pa.float64()).to_numpy(zero_copy_only=False)
+    pos = np.flatnonzero(~np.isnan(idx))
+    cidx = idx[pos].astype(np.int64)
+    crho = rho[pos].astype(np.uint8)
+    a = np.searchsorted(pos, lo, side="left")
+    b = np.searchsorted(pos, hi, side="left")
+    base_regs = np.zeros(HLL_M, dtype=np.uint8)
+    has_base = False
+    for e in base_entries or ():
+        ei = int(e["i"] if isinstance(e, dict) else e[0])
+        er = int(e["r"] if isinstance(e, dict) else e[1])
+        if er > base_regs[ei]:
+            base_regs[ei] = er
+        has_base = True
+    out = np.empty(len(lo), dtype=object)
+    out[:] = None
+    for i in range(len(lo)):
+        if b[i] <= a[i] and not has_base:
+            continue
+        regs = base_regs.copy()
+        np.maximum.at(regs, cidx[a[i] : b[i]], crho[a[i] : b[i]])
+        out[i] = hll_estimate(regs)
+    return out
+
+
+def _range_values(p: AggregationPart, ev: _Events, lo_key, head_key) -> np.ndarray:
+    """Python values of one unbucketed part for queries whose event
+    ranges are [lo_key, head_key) in composite-key space."""
+    lo = np.searchsorted(ev.key, lo_key, side="left")
+    hi = np.searchsorted(ev.key, head_key, side="left")
+    if p.operation is Operation.APPROX_UNIQUE_COUNT:
+        return _hll_eval(ev, p.input_column, lo, hi)
+    return _compute_part(p, ev.col(p.input_column), lo, hi)
+
+
+def _sliced_values(p: AggregationPart, ev: _Events, qt, slice_lo: int, base: dict):
+    """Unbounded part of a sliced hot-key segment (``ev``: that segment's
+    events): the local range is [slice_start, qt), everything earlier
+    comes from the baseline IR row ``base``."""
+    lo = np.full(len(qt), np.searchsorted(ev.ts, slice_lo, side="left"), dtype=np.int64)
+    head = np.searchsorted(ev.ts, qt, side="left")
+    if p.operation is Operation.APPROX_UNIQUE_COUNT:
+        return _hll_eval(ev, p.input_column, lo, head, base.get("hreg"))
+    return _merge_unbounded(p, ev.col(p.input_column), lo, head, base)
+
+
+def _fill_maps(maps: list, vals, bval: str) -> None:
+    for i, v in enumerate(vals):
+        if v is not None and v is not pd.NA:
+            maps[i][bval] = v
+
+
+def _to_arrow(vals, typ: pa.DataType) -> pa.Array:
+    if isinstance(vals, pd.api.extensions.ExtensionArray):
+        return pa.array(vals, type=typ)
+    # pandas null semantics, as the pandas→Arrow path applied: NaN inside
+    # list values reads as null
+    return pa.array(vals, type=typ, from_pandas=True)
+
+
 def make_temporal_kernel(
     gb: GroupBy,
     events_schema: T.StructType,
-    query_cols: list[str],
+    out_schema: T.StructType,
+    co_keys: list[str],
     baseline_cols: "dict[int, dict[str, str]] | None" = None,
 ):
-    """``baseline_cols``: hot-key slicing support — {index within the
-    unbounded-part subsequence of unpacked(): {state: qdf column}}. When a
-    query group carries a non-null ``__slice_lo``, unbounded parts compute
-    [slice_start, qt) locally and merge the group's baseline IR columns
-    (_merge_unbounded) instead of needing the full event prefix."""
+    """The raw as-of kernel as a ``mapInArrow`` function over the tagged,
+    (co_keys, ts)-sorted stream (see _EV_TAG). Output: the query columns
+    of ``out_schema`` passed through as Arrow, then one column per part.
+
+    Python holds one Arrow batch plus the rows of the key that straddles
+    the batch boundary: complete segments are evaluated, the last
+    (possibly continuing) segment is carried into the next batch.
+
+    ``baseline_cols``: hot-key slicing support — {index within the
+    unbounded-part subsequence of unpacked(): {state: query column}}. A
+    segment whose queries carry a non-null ``__slice_lo`` computes its
+    unbounded parts over [slice_start, qt) and merges the segment's
+    baseline IR columns (_merge_unbounded) instead of needing the full
+    event prefix."""
     parts = gb.unpacked()
-    numeric_cols = {
-        f.name: isinstance(f.dataType, (T.NumericType, T.BooleanType)) for f in events_schema.fields
+    kinds = {
+        # an all-null (void) column aggregates like an all-null number
+        f.name: (
+            isinstance(f.dataType, (T.NumericType, T.BooleanType, T.NullType)),
+            isinstance(f.dataType, _INTEGRAL),
+        )
+        for f in events_schema.fields
     }
-    integral_cols = {f.name: isinstance(f.dataType, _INTEGRAL) for f in events_schema.fields}
     input_types = {f.name: f.dataType for f in events_schema.fields}
+    feature_names = {p.output_column for p in parts}
+    query_cols = [f.name for f in out_schema.fields if f.name not in feature_names]
+    arrow_schema = to_arrow_schema(out_schema)
+    shared = [*co_keys, TS_COL]
+    ev_cols = [f.name for f in events_schema.fields if f.name not in shared]
 
-    def kernel(qdf: pd.DataFrame, edf: pd.DataFrame) -> pd.DataFrame:
-        out = qdf.loc[:, query_cols].copy()
-        nq = len(qdf)
+    def evaluate(t: pa.Table) -> "pa.RecordBatch | None":
+        if t.num_rows == 0:
+            return None
+        t = t.combine_chunks()
+        seg = np.cumsum(_segment_starts(t, co_keys)) - 1
+        is_ev = _flat(t.column(_EV_TAG)).to_numpy(zero_copy_only=False)
+        q_rows = np.flatnonzero(~is_ev)
+        nq = len(q_rows)
         if nq == 0:
-            for p in parts:
-                out[p.output_column] = pd.Series([], dtype=object)
-            return out
-        # null-ts query rows get null features IN the kernel (the
-        # padGroupByFields contract). Handling them here instead of a
-        # driver-side pre-filter + pad-union lets passthrough callers ship
-        # the query frame through ONE subtree — the filter/union form
-        # re-evaluated the whole (possibly window-heavy) query plan a
-        # second time just to find the pad rows.
-        null_ts = qdf[TS_COL].isna().to_numpy()
-        if null_ts.any():
-            pad_out = qdf.loc[null_ts, query_cols].copy()
-            for p in parts:
-                pad_out[p.output_column] = None
-            if null_ts.all():
-                return pad_out
-            return pd.concat(
-                [kernel(qdf.loc[~null_ts], edf), pad_out], ignore_index=True
-            )
-        slice_lo = None
-        if baseline_cols is not None and "__slice_lo" in qdf.columns:
-            v = qdf["__slice_lo"].iloc[0]
-            slice_lo = None if pd.isna(v) else int(v)
-        if len(edf) == 0 and slice_lo is None:
-            for p in parts:
-                out[p.output_column] = None
-            return out
-        edf = edf.sort_values(TS_COL, kind="mergesort").reset_index(drop=True)
-        ev_ts = edf[TS_COL].to_numpy(dtype=np.int64)
-        qt = qdf[TS_COL].to_numpy(dtype=np.int64)
-        head = np.searchsorted(ev_ts, qt, side="left")  # ts < qt — strict head
+            return None
+        e_rows = np.flatnonzero(is_ev)
+        # split by kind in Arrow BEFORE any numpy conversion: the union's
+        # columns are null on the other kind's rows, and a nullable int64
+        # column converted whole would widen to float64
+        q = t.select([c for c in t.column_names if c != _EV_TAG and not c.startswith(_EV_PREFIX)])
+        q = q.take(q_rows)
+        e_tab = t.select(shared + [_EV_PREFIX + c for c in ev_cols]).take(e_rows)
+        e_tab = e_tab.rename_columns(shared + ev_cols)
+        e_seg, q_seg = seg[e_rows], seg[q_rows]
+        # composite (segment, ts-rank) sort key: one searchsorted answers
+        # every query's bound, and no range ever leaves its own segment
+        e_ts = _flat(e_tab.column(TS_COL)).to_numpy(zero_copy_only=False)
+        uts = np.unique(e_ts)
+        width = len(uts) + 1
+        events = _Events(e_tab, e_seg, e_seg * width + np.searchsorted(uts, e_ts), kinds)
 
-        cols: dict[str, _EventCol] = {}
-        bucket_groups: dict[str, dict] = {}
+        def qkey(t_):
+            return q_seg * width + np.searchsorted(uts, t_, side="left")
 
-        def get_groups(bcol: str) -> dict:
-            if bcol not in bucket_groups:
-                bmask = edf[bcol].notna()
-                groups = {}
-                for bval, sub in edf[bmask].groupby(bcol, sort=False):
-                    sub = sub.reset_index(drop=True)
-                    groups[str(bval)] = (sub, sub[TS_COL].to_numpy(dtype=np.int64))
-                bucket_groups[bcol] = groups
-            return bucket_groups[bcol]
+        qt_arr = _flat(q.column(TS_COL))
+        # null-ts queries get null features (the padGroupByFields
+        # contract); they compute against ts 0 and are blanked below
+        null_ts = qt_arr.is_null().to_numpy(zero_copy_only=False)
+        qt = pc.fill_null(qt_arr.cast(pa.int64()), 0).to_numpy()
+        head_key = qkey(qt)
+        seg_key = q_seg * width
 
-        def event_col(name: str, frame: pd.DataFrame = None) -> _EventCol:
-            if frame is None:
-                if name not in cols:
-                    cols[name] = _EventCol(
-                        edf[name], numeric_cols[name], integral_cols[name], ts=ev_ts
-                    )
-                return cols[name]
-            fts = (
-                frame[TS_COL].to_numpy(dtype=np.int64) if TS_COL in frame.columns else None
-            )
-            return _EventCol(frame[name], numeric_cols[name], integral_cols[name], ts=fts)
+        # sliced hot-key segments: (query range, events, slice start, row
+        # of baseline columns), one per segment whose __slice_lo is set
+        sliced = []
+        if baseline_cols and "__slice_lo" in q.column_names:
+            sl = _flat(q.column("__slice_lo"))
+            sl_ok = sl.is_valid().to_numpy(zero_copy_only=False)
+            extra = {c: _flat(q.column(c)) for c in q.column_names if c not in query_cols}
+            for s in np.unique(q_seg[sl_ok]):
+                qa, qb = np.searchsorted(q_seg, [s, s + 1])
+                i = qa + int(np.argmax(sl_ok[qa:qb]))
+                ea, eb = np.searchsorted(e_seg, [s, s + 1])
+                row = {c: a[i].as_py() for c, a in extra.items()}
+                sub = events.take(np.arange(ea, eb))
+                sliced.append((qa, qb, sub, int(row["__slice_lo"]), row))
 
-        def hll_eval(
-            frame: pd.DataFrame,
-            name: str,
-            lo: np.ndarray,
-            hi: np.ndarray,
-            base_entries=None,
-        ):
-            """APPROX_UNIQUE_COUNT via the shared HLL register sketch:
-            JVM-hashed (idx, rho) per event (null-guarded), register max
-            over each query's event range — the SAME estimator the tiled
-            kernel stitches from tile maps (functions/sketches.py).
-
-            ``base_entries``: sliced hot key — sparse (i, r) register
-            entries covering every event before the slice; register max is
-            associative, so merging them with the local range reproduces
-            the unsliced estimate bit-identically."""
-            idx = pd.to_numeric(frame[f"__hh_{name}_idx"], errors="coerce").to_numpy(np.float64)
-            rho = pd.to_numeric(frame[f"__hh_{name}_rho"], errors="coerce").to_numpy(np.float64)
-            pos = np.flatnonzero(~np.isnan(idx))
-            cidx = idx[pos].astype(np.int64)
-            crho = rho[pos].astype(np.uint8)
-            a = np.searchsorted(pos, lo, side="left")
-            b = np.searchsorted(pos, hi, side="left")
-            base_regs = np.zeros(HLL_M, dtype=np.uint8)
-            has_base = False
-            if base_entries is not None and not (
-                isinstance(base_entries, float) and base_entries != base_entries
-            ):
-                for e in base_entries:
-                    ei = int(e["i"] if isinstance(e, dict) else e[0])
-                    er = int(e["r"] if isinstance(e, dict) else e[1])
-                    if er > base_regs[ei]:
-                        base_regs[ei] = er
-                    has_base = True
-            out = np.empty(len(lo), dtype=object)
-            out[:] = None
-            for i in range(len(lo)):
-                if b[i] <= a[i] and not has_base:
-                    continue
-                regs = base_regs.copy()
-                np.maximum.at(regs, cidx[a[i]:b[i]], crho[a[i]:b[i]])
-                out[i] = hll_estimate(regs)
-            return out
-
+        features = []
         ub_i = -1
         for p in parts:
+            mapping = None
             if p.window is None:
                 ub_i += 1
-                if slice_lo is not None and baseline_cols and ub_i in baseline_cols:
-                    if "__bk" in baseline_cols[ub_i]:
-                        # bucketed sliced hot group: merge each bucket's
-                        # baseline IR with that bucket's slice-local
-                        # events — same per-bucket algebra as unsliced,
-                        # same merge rules as the plain sliced path
-                        base_by_b = _parse_bucketed_base(qdf, baseline_cols[ub_i])
-                        groups = get_groups(p.bucket)
-                        stripped = AggregationPart(
-                            p.input_column, p.operation, p.arg_map, None, None
-                        )
-                        maps = [dict() for _ in range(nq)]
-                        zero = np.zeros(nq, dtype=np.int64)
-                        empty_sub = edf.iloc[0:0]
-                        for bval in set(groups) | set(base_by_b):
-                            base_b = base_by_b.get(bval, {})
-                            if bval in groups:
-                                sub, sub_ts = groups[bval]
-                                sub_lo = np.full(
-                                    nq,
-                                    np.searchsorted(sub_ts, slice_lo, side="left"),
-                                    dtype=np.int64,
-                                )
-                                sub_head = np.searchsorted(sub_ts, qt, side="left")
-                            else:
-                                sub, sub_ts = empty_sub, np.empty(0, dtype=np.int64)
-                                sub_lo = sub_head = zero
-                            if p.operation is Operation.APPROX_UNIQUE_COUNT:
-                                raw = hll_eval(
-                                    sub, p.input_column, sub_lo, sub_head,
-                                    base_b.get("hreg"),
-                                )
-                            else:
-                                scol = _EventCol(
-                                    sub[p.input_column],
-                                    numeric_cols[p.input_column],
-                                    integral_cols[p.input_column],
-                                    ts=sub_ts,
-                                )
-                                raw = _merge_unbounded(
-                                    stripped, scol, sub_lo, sub_head, base_b
-                                )
-                            vals = _cast_feature(
-                                raw, stripped, input_types[p.input_column]
-                            )
-                            for qi, v in enumerate(vals):
-                                if v is not None and v is not pd.NA:
-                                    maps[qi][bval] = v
-                        out[p.output_column] = [m if m else None for m in maps]
-                        continue
-                    # sliced hot group: local range is [slice_start, qt),
-                    # everything earlier comes from the baseline IR row
-                    lo = np.full(
-                        nq, np.searchsorted(ev_ts, slice_lo, side="left"), dtype=np.int64
-                    )
-                    base = {
-                        st: (
-                            qdf[cname].iloc[0]
-                            if cname in qdf.columns
-                            else None
-                        )
-                        for st, cname in baseline_cols[ub_i].items()
-                    }
-                    if p.operation is Operation.APPROX_UNIQUE_COUNT:
-                        vals = hll_eval(
-                            edf, p.input_column, lo, head, base.get("hreg")
-                        )
-                    else:
-                        vals = _merge_unbounded(
-                            p, event_col(p.input_column), lo, head, base
-                        )
-                    out[p.output_column] = _cast_feature(vals, p, input_types[p.input_column])
-                    continue
-                lo = np.zeros(nq, dtype=np.int64)
+                lo_key = seg_key
+                if sliced and ub_i in baseline_cols:
+                    mapping = baseline_cols[ub_i]
             else:
                 w, hop = p.window.millis, p.hop_millis
-                tail_t = ((qt - w) // hop) * hop  # floor-to-hop grid (sawtooth tail)
-                lo = np.searchsorted(ev_ts, tail_t, side="left")
+                lo_key = qkey(((qt - w) // hop) * hop)  # floor-to-hop sawtooth tail
+            itype = input_types[p.input_column]
             if p.bucket is None:
-                if p.operation is Operation.APPROX_UNIQUE_COUNT:
-                    vals = hll_eval(edf, p.input_column, lo, head)
-                else:
-                    vals = _compute_part(p, event_col(p.input_column), lo, head)
-                out[p.output_column] = _cast_feature(vals, p, input_types[p.input_column])
+                vals = _range_values(p, events, lo_key, head_key)
+                for qa, qb, sub, slice_lo, row in (sliced if mapping else ()):
+                    base = {st: row.get(c) for st, c in mapping.items()}
+                    vals[qa:qb] = _sliced_values(p, sub, qt[qa:qb], slice_lo, base)
+                vals[null_ts] = None
+                vals = _cast_feature(vals, p, itype)
             else:
                 # bucketed: per distinct bucket value, compute on the event
                 # subset and assemble Map[bucket → value] per query
                 # (BucketedColumnAggregator semantics)
-                groups = get_groups(p.bucket)
-                maps = [dict() for _ in range(nq)]
                 stripped = AggregationPart(p.input_column, p.operation, p.arg_map, p.window, None)
-                for bval, (sub, sub_ts) in groups.items():
-                    sub_head = np.searchsorted(sub_ts, qt, side="left")
-                    if p.window is None:
-                        sub_lo = np.zeros(nq, dtype=np.int64)
-                    else:
-                        sub_lo = np.searchsorted(sub_ts, tail_t, side="left")
-                    if p.operation is Operation.APPROX_UNIQUE_COUNT:
-                        raw_vals = hll_eval(sub, p.input_column, sub_lo, sub_head)
-                    else:
-                        scol = _EventCol(
-                            sub[p.input_column], numeric_cols[p.input_column],
-                            integral_cols[p.input_column], ts=sub_ts,
-                        )
-                        raw_vals = _compute_part(stripped, scol, sub_lo, sub_head)
-                    vals = _cast_feature(raw_vals, stripped, input_types[p.input_column])
-                    for i, v in enumerate(vals):
-                        if v is not None and v is not pd.NA:
-                            maps[i][bval] = v
-                out[p.output_column] = [m if m else None for m in maps]
-        return out
+                maps = [dict() for _ in range(nq)]
+                for bval, sub in events.groups(p.bucket).items():
+                    raw = _range_values(stripped, sub, lo_key, head_key)
+                    _fill_maps(maps, _cast_feature(raw, stripped, itype), bval)
+                for qa, qb, sub, slice_lo, row in (sliced if mapping else ()):
+                    maps[qa:qb] = _sliced_maps(p, mapping, sub, qt[qa:qb], slice_lo, row, itype)
+                vals = [m if m and not z else None for m, z in zip(maps, null_ts)]
+            features.append(vals)
+        cols = [_flat(q.column(c)) for c in query_cols]
+        cols += [_to_arrow(v, f.type) for v, f in zip(features, list(arrow_schema)[len(cols):])]
+        # the union may have widened a shared key column; cast back
+        cols = [c if c.type == f.type else c.cast(f.type) for c, f in zip(cols, arrow_schema)]
+        return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+
+    def kernel(batches):
+        pending: list = []  # rows of the open segment, which may continue
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            prev = pending[-1].slice(pending[-1].num_rows - 1) if pending else None
+            cuts = np.flatnonzero(_segment_starts(b, co_keys, prev))
+            if len(cuts) == 0:
+                pending.append(b)
+                continue
+            done = pending + [b.slice(0, cuts[-1])]
+            pending = [b.slice(cuts[-1])]
+            out = evaluate(pa.Table.from_batches(done))
+            if out is not None:
+                yield out
+        if pending:
+            out = evaluate(pa.Table.from_batches(pending))
+            if out is not None:
+                yield out
 
     return kernel
+
+
+def _sliced_maps(p, mapping, ev: _Events, qt, slice_lo: int, row: dict, itype) -> list:
+    """Bucketed unbounded part of a sliced hot-key segment: each bucket's
+    baseline IR merged with that bucket's slice-local events — the same
+    per-bucket algebra as unsliced, the same merge rules as the plain
+    sliced path."""
+    base_by_b = _parse_bucketed_base(row, mapping)
+    groups = ev.groups(p.bucket)
+    p = AggregationPart(p.input_column, p.operation, p.arg_map, None, None)
+    empty = ev.take(np.empty(0, dtype=np.int64))
+    maps = [dict() for _ in range(len(qt))]
+    for bval in sorted(set(groups) | set(base_by_b)):
+        raw = _sliced_values(p, groups.get(bval, empty), qt, slice_lo, base_by_b.get(bval, {}))
+        _fill_maps(maps, _cast_feature(raw, p, itype), bval)
+    return maps
 
 
 def temporal_events(
@@ -1151,9 +1301,9 @@ def _temporal_events_impl(
 
     events = null_key_filter(events, tuple(keys)).filter(F.col(TS_COL).isNotNull())
     # queries and events often derive from the same frame (e.g. features at
-    # every event); re-alias every event column so the cogroup children share
-    # no attribute ids — shared ids trip Catalyst's self-join dedup and the
-    # right child loses its non-key columns at execution
+    # every event); re-alias every event column so frames joined from both
+    # sides (the hot-key baselines) share no attribute ids — shared ids
+    # trip Catalyst's self-join dedup
     events = events.select(*[F.col(c).alias(c) for c in events.columns])
 
     # uniqSort trick (spark/Extensions.scala:303-318): only DISTINCT
@@ -1171,7 +1321,7 @@ def _temporal_events_impl(
 
     if passthrough:
         # the WHOLE query frame rides the kernel: null-ts rows are padded
-        # IN-kernel and null-key rows cogroup against an empty event group
+        # IN-kernel and null-key rows form segments without events
         # (events are null-key-filtered) — a filter + pad-union here would
         # re-evaluate the query subtree twice (measured as a full second
         # window chain in the flagship plan)
@@ -1207,7 +1357,7 @@ def _temporal_events_impl(
     cls = slice_classification(gb)
     if cls is not None and (hot_keys or hot_key_threshold):
         # the hot path consumes qlite up to three times (detection action,
-        # baseline-slice derivation, kernel cogroup input); without a
+        # baseline-slice derivation, kernel input); without a
         # persist each consumer re-executes the query spine's upstream —
         # for an enriched spine (window functions over the full input)
         # that triples the job's dominant stage (measured 253s → 422s on
@@ -1289,21 +1439,48 @@ def _temporal_events_impl(
             ),
         )
         co_keys = keys + ["__qs"]
-    kernel = make_temporal_kernel(gb, ev_schema, slim_cols, baseline_cols=baseline_cols)
-    # explicit keys-hash repartition with a pinned partition count: the
+    kernel = make_temporal_kernel(
+        gb, events.schema, schema, co_keys, baseline_cols=baseline_cols
+    )
+    # ONE keyed stream per task: queries and events unioned, hashed on the
+    # keys and sorted by (keys, ts), so each key's rows arrive contiguous
+    # and time-ordered and the kernel evaluates whole Arrow batches at
+    # once. Explicit repartition with a pinned partition count: the
     # kernel stage is CPU-bound, and AQE's byte-targeted coalescing would
     # otherwise shrink it to a handful of tasks (16MB of slim rows ≈ 10
     # partitions on a 32-core box — a 3x parallelism loss measured)
     p_n = kernel_partitions(spark)
     feats = (
-        qlite.repartition(p_n, *co_keys)
-        .groupBy(*co_keys)
-        .cogroup(events.repartition(p_n, *co_keys).groupBy(*co_keys))
-        .applyInPandas(kernel, schema=schema)
+        _tagged_union(qlite, events, co_keys)
+        .repartition(p_n, *co_keys)
+        .sortWithinPartitions(*co_keys, TS_COL)
+        .mapInArrow(kernel, schema)
     )
     if passthrough:
         return feats
     return queries.join(feats, slim_cols, "left")
+
+
+def _tagged_union(qlite: DataFrame, events: DataFrame, co_keys: list[str]) -> DataFrame:
+    """The kernel's input frame: the _EV_TAG flag, the shared (co_keys,
+    ts) columns, then every query column and every event column renamed
+    with _EV_PREFIX — each null on the other kind's rows."""
+    shared = [*co_keys, TS_COL]
+    q_extra = [f for f in qlite.schema.fields if f.name not in shared]
+    e_extra = [f for f in events.schema.fields if f.name not in shared]
+
+    def nulls(fields, prefix=""):
+        return [F.lit(None).cast(f.dataType).alias(prefix + f.name) for f in fields]
+
+    q = qlite.select(
+        F.lit(False).alias(_EV_TAG), *shared, *[f.name for f in q_extra],
+        *nulls(e_extra, _EV_PREFIX),
+    )
+    e = events.select(
+        F.lit(True).alias(_EV_TAG), *shared, *nulls(q_extra),
+        *[F.col(f.name).alias(_EV_PREFIX + f.name) for f in e_extra],
+    )
+    return q.unionByName(e)
 
 
 # unbounded ops whose full-prefix state is a SMALL mergeable IR (count,

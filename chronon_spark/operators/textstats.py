@@ -30,14 +30,6 @@ def token_count(text_col: str = "text") -> Column:
     return F.size(tokens(text_col))
 
 
-def bpe_ish_token_count(text_col: str = "text") -> Column:
-    """A BPE-flavored proxy: count word pieces after splitting on
-    non-alphanumerics AND intra-word 4-char chunks (≈ subword count),
-    deterministic and dialect-portable."""
-    words = f"filter(split(regexp_replace(lower({text_col}), '[^a-z0-9]+', ' '), ' '), t -> t != '')"
-    return F.expr(f"aggregate(transform({words}, w -> 1 + int(floor(length(w) / 4))), 0, (s, v) -> s + v)")
-
-
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Length / punctuation / stopword / repetition signals (the usual
     C4/Gopher-style filters)."""

@@ -36,15 +36,6 @@ def shift_ds(ds: str, days: int) -> str:
     return d.isoformat()
 
 
-def ds_to_millis(ds: str) -> int:
-    d = _dt.date.fromisoformat(ds)
-    return int(_dt.datetime(d.year, d.month, d.day, tzinfo=_dt.timezone.utc).timestamp() * 1000)
-
-
-def millis_to_ds(ms: int) -> str:
-    return _dt.datetime.fromtimestamp(ms / 1000, tz=_dt.timezone.utc).date().isoformat()
-
-
 def scan_table(spark: SparkSession, table: str) -> DataFrame:
     """Load a table by catalog name or parquet path (spark/LocalDataLoader.scala
     idea). Paths containing '/' or ending in .parquet read as parquet."""

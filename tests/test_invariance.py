@@ -4,7 +4,8 @@
   and shuffle width (the sandbox proxy for cluster-size invariance)
 - step-days invariance: one-shot backfill == many small stepped runs
 - hypothesis property test: the pure Arrow kernel vs the naive oracle on
-  adversarial random streams (no Spark in the loop)
+  adversarial random streams cut into arbitrary batches (no Spark in the
+  loop)
 """
 
 import numpy as np
@@ -24,7 +25,7 @@ from chronon_spark.api.types import (
     TimeUnit,
     Window,
 )
-from chronon_spark.operators.temporal import make_temporal_kernel
+from chronon_spark.operators.temporal import make_temporal_kernel, output_field
 from chronon_spark.pipelines.webtext import backfill_features
 from chronon_spark.fixtures.webtext import generate_webtext
 from chronon_spark.runner import run_group_by_backfill
@@ -117,31 +118,53 @@ EV_SCHEMA = T.StructType(
     ev_ts=st.lists(st.integers(0, 6 * 3_600_000), min_size=0, max_size=60),
     q_off=st.lists(st.integers(0, 7 * 3_600_000), min_size=1, max_size=25),
     nulls=st.lists(st.booleans(), min_size=0, max_size=60),
+    batch_rows=st.integers(1, 40),
 )
-def test_kernel_property(ev_ts, q_off, nulls):
+def test_kernel_property(ev_ts, q_off, nulls, batch_rows):
     """Pure-kernel property test: arbitrary event/query time sets,
-    duplicates and nulls included — engine == naive oracle."""
+    duplicates and nulls included, for three keys sharing every timestamp
+    (different values; the last key's rows are carried, so three keys let
+    one batch evaluate two complete ones), the tagged (key, ts)-sorted
+    stream cut into arbitrary Arrow batches — engine == naive oracle per
+    key."""
+    import pyarrow as pa
+
     base = T0
     ev_ts = sorted(base + t for t in ev_ts)
     nulls = (nulls + [False] * len(ev_ts))[: len(ev_ts)]
-    vals = [None if nz else float((i * 37) % 101) for i, nz in enumerate(nulls)]
-    edf = pd.DataFrame({"k": "a", "ts": np.array(ev_ts, dtype=np.int64), "v": vals})
+    vals = {
+        k: [None if nz else float((i * m) % 101) for i, nz in enumerate(nulls)]
+        for k, m in (("a", 37), ("b", 53), ("c", 71))
+    }
     qts = sorted(base + t for t in q_off)
-    qdf = pd.DataFrame({"k": "a", "ts": np.array(qts, dtype=np.int64)})
-    kernel = make_temporal_kernel(KERNEL_GB, EV_SCHEMA, ["k", "ts"])
-    out = kernel(qdf, edf)
     parts = KERNEL_GB.unpacked()
-    ets = edf["ts"].to_numpy(np.int64)
-    evs = edf["v"].to_numpy(object)
-    for i, qt in enumerate(qts):
+    out_schema = T.StructType(
+        [EV_SCHEMA["k"], EV_SCHEMA["ts"]] + [output_field(p, EV_SCHEMA) for p in parts]
+    )
+    n = len(qts) + len(ev_ts)
+    stream = pa.concat_tables(
+        pa.table(
+            {
+                "__is_ev": [False] * len(qts) + [True] * len(ev_ts),
+                "k": [k] * n,
+                "ts": pa.array(qts + ev_ts, pa.int64()),
+                "__ev_v": pa.array([None] * len(qts) + v, pa.float64()),
+            }
+        )
+        for k, v in vals.items()
+    ).sort_by([("k", "ascending"), ("ts", "ascending")])
+    kernel = make_temporal_kernel(KERNEL_GB, EV_SCHEMA, out_schema, ["k"])
+    out = pa.Table.from_batches(
+        list(kernel(iter(stream.to_batches(max_chunksize=batch_rows))))
+    ).to_pylist()
+    assert sorted((r["k"], r["ts"]) for r in out) == [(k, t) for k in vals for t in qts]
+    ets = np.array(ev_ts, dtype=np.int64)
+    for row in out:
+        evs = np.array(vals[row["k"]], dtype=object)
         for p in parts:
-            got = out.iloc[i][p.output_column]
-            if got is pd.NA:
-                got = None
-            if isinstance(got, np.ndarray):
-                got = list(got)
-            exp = naive_feature(p, ets, evs, int(qt)) if len(edf) else None
-            assert allclose_feature(got, exp), (qt, p.output_column, got, exp)
+            got = row[p.output_column]
+            exp = naive_feature(p, ets, evs, row["ts"]) if len(ev_ts) else None
+            assert allclose_feature(got, exp), (row["k"], row["ts"], p.output_column, got, exp)
 
 
 def test_tiled_collection_partitioning_invariance(spark):

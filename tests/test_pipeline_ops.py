@@ -38,6 +38,20 @@ def test_exact_dedup(spark, docs):
     assert out.agg(F.sum("dup_count")).first()[0] == docs.count()
 
 
+def test_exact_dedup_null_ids(spark):
+    """The lowest non-null id represents its cluster (nulls rank last),
+    and a cluster whose ids are ALL null still emits a real input row."""
+    docs = spark.createDataFrame(
+        [(None, "Same  text", "n0"), (7, "same text", "s7"), (3, "SAME TEXT ", "s3"),
+         (None, "only nulls", "a"), (None, "Only  nulls", "b"), (5, "solo", "s5")],
+        "doc_id long, text string, tag string",
+    )
+    out = {r["tag"]: (r["doc_id"], r["dup_count"]) for r in exact_dedup(docs).collect()}
+    assert out.pop("s3") == (3, 3) and out.pop("s5") == (5, 1)
+    assert len(out) == 1 and set(out) <= {"a", "b"}
+    assert list(out.values()) == [(None, 2)]
+
+
 def test_minhash_self_duplicates(spark, docs):
     """A doc duplicated verbatim must be found by minhash LSH."""
     d2 = docs.limit(5).withColumn("doc_id", F.col("doc_id") + 1_000_000)
@@ -828,6 +842,32 @@ def test_boilerplate_arrow_path_large_set(spark):
     assert arrow[0]["text_clean"] == "unique 0" and arrow[0]["n_lines_removed"] == n_bp
     assert arrow[3]["text_clean"] == "" and arrow[3]["n_lines_removed"] == n_bp
     assert arrow[4]["text_clean"] == "plain body" and arrow[4]["n_lines_removed"] == 0
+
+
+def test_boilerplate_arrow_kernel_sliced_batch():
+    """The Arrow kernel on a SLICED batch (list offsets[0] != 0, so
+    ``values`` still holds the rows sliced away) must clean each row as
+    the unsliced batch does."""
+    import pyarrow as pa
+
+    from chronon_spark.operators.boilerplate import _clean_batch
+
+    lines = [["x", "BP", "a"], ["BP", "BP"], None, ["b", "BP", "c"], ["d"], []]
+    full = pa.RecordBatch.from_arrays(
+        [pa.array(range(len(lines))), pa.array(lines, pa.list_(pa.string()))],
+        ["doc_id", "parts"],
+    )
+    vs = pa.array(["BP"])
+
+    def clean(b):
+        out = _clean_batch(b, vs, "\n", "parts", ["doc_id"], "text_clean")
+        return list(zip(*(out.column(i).to_pylist() for i in range(3))))
+
+    whole = clean(full)
+    assert whole[3] == (3, "b\nc", 1) and whole[2] == (2, None, 0)
+    sliced = full.slice(2)
+    assert sliced.column(1).offsets[0].as_py() != 0
+    assert clean(sliced) == whole[2:]
 
 
 def test_lm_score_vocab_broadcast_guard(spark):

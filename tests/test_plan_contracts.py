@@ -320,7 +320,7 @@ def test_sliced_raw_kernel_plan_contracts(spark):
     # the kernel stage's exchange must hash on user AND the slice id:
     # some hashpartitioning clause carries __qs in its key list
     low = plan.lower()
-    assert "flatmapcogroupsinpandas" in low
+    assert "mapinarrow" in low
     assert any(
         "__qs" in seg[:120] for seg in low.split("hashpartitioning(")[1:]
     ), "no exchange hashes on the slice id"

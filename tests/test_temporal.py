@@ -191,3 +191,124 @@ def test_temporal_derivations(spark):
         last = r[1_700_000_000_000 + 5000]
         assert last["price_sum_7d"] == 15.0 and last["price_count_7d"] == 5
         assert last["price_mean_7d"] == 3.0
+
+
+CROSS_AGGS = (
+    Aggregation("v", Operation.COUNT, windows=(None, Window(1))),
+    Aggregation("v", Operation.SUM, windows=(Window(2, TimeUnit.HOURS), None)),
+    Aggregation("v", Operation.AVERAGE, windows=(Window(1),)),
+    Aggregation("v", Operation.MIN, windows=(Window(1),)),
+    Aggregation("v", Operation.MAX, windows=(None,)),
+    Aggregation("v", Operation.VARIANCE, windows=(Window(1),)),
+    Aggregation("v", Operation.FIRST, windows=(Window(2, TimeUnit.HOURS),)),
+    Aggregation("v", Operation.LAST, windows=(None, Window(1))),
+    Aggregation("v", Operation.LAST_K, arg_map={"k": 2}, windows=(Window(1),)),
+    Aggregation("cat", Operation.LAST, windows=(None,)),
+    Aggregation("v", Operation.COUNT, windows=(Window(1),), buckets=("cat",)),
+)
+
+
+def _cross_key_data():
+    """Adjacent composite keys that share timestamps, with every edge the
+    batched kernel must keep per key: equal ts across keys, events exactly
+    on the sawtooth tail (hop 1h for 1d, 5min for 2h) and at the query ts,
+    same-ts value ties (LAST/FIRST tie-break), NaN and ±inf values, a
+    query-only key between keys with events, null-ts queries, partially
+    null and all-null keys."""
+    hour = 3_600_000
+    t = T0 - T0 % hour  # hop-aligned
+    vals = [1.0, 4.0, float("nan"), float("inf"), 2.0, float("-inf"), None, 3.0, 7.0, 5.0]
+    cats = ["a", "b", None, "a", "b", "a", "a", None, "b", "a"]
+    keys = [("a", "x"), ("a", None), ("b", "x"), (None, "x"), ("d", "y")]
+    ev = []
+    for ki, (k1, k2) in enumerate(keys):
+        for j in range(24):
+            ts = t + (j // 2) * hour + (j % 3) * 300_000  # pairs of equal ts
+            v = vals[(j + 3 * ki) % len(vals)]
+            if ki == 4 and j > 3:
+                v = [float("inf"), 6.0][j % 2]  # +inf run next to finite values
+            ev.append((k1, k2, ts, v, cats[(j + ki) % len(cats)]))
+    ev += [(None, None, t + hour, 9.0, "a")]  # all-null key: dropped, never matched
+    q = []
+    for k1, k2 in keys + [("c", "x"), (None, None)]:  # c: query-only key
+        for ts in (
+            t + 5 * hour,  # equals event ts (excluded)
+            t + 5 * hour + 1,
+            t + 13 * hour + 300_000,
+            t + 24 * hour,  # 1d tail lands exactly on the first events
+            t + 24 * hour + hour - 1,
+            t + 2 * hour + 2 * hour,  # 2h tail on an event ts
+            t + 40 * hour,
+            None,
+        ):
+            q.append((k1, k2, ts))
+    return ev, q
+
+
+def test_cross_key_batched_parity(spark):
+    """The batched raw kernel == naive oracle per composite key, with
+    Arrow batches of 7 rows (keys straddle batch boundaries) and of 1000
+    (several keys share one batch). All-null keys never match (events
+    with them are dropped)."""
+    ev, q = _cross_key_data()
+    ev_df = spark.createDataFrame(ev, "k1 string, k2 string, ts long, v double, cat string")
+    q_df = spark.createDataFrame(q, "k1 string, k2 string, ts long")
+    gb = GroupBy(
+        name="xk", sources=(EventSource(table="ev"),), key_columns=("k1", "k2"),
+        aggregations=CROSS_AGGS,
+    )
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    outs = {}
+    try:
+        for rows in ("7", "1000"):
+            spark.conf.set(conf, rows)
+            for pt in (False, True):
+                outs[rows, pt] = [r.asDict() for r in temporal_events(
+                    spark, gb, q_df, ev_df, mode="raw", passthrough=pt).collect()]
+    finally:
+        spark.conf.set(conf, old)
+    evp = pd.DataFrame(ev, columns=["k1", "k2", "ts", "v", "cat"])
+    parts = gb.unpacked()
+    for (rows, pt), out in outs.items():
+        assert len(out) == len(q)
+        bad = []
+        for row in out:
+            key = (row["k1"], row["k2"])
+            # grouping semantics: a null key part matches null
+            sel = [evp[c].isna() if v is None else evp[c].eq(v) for c, v in zip(("k1", "k2"), key)]
+            g = evp[sel[0] & sel[1]].sort_values("ts", kind="mergesort")
+            for p in parts:
+                # the uniqSort join-back (passthrough=False) is an equi-join
+                # on the keys: any null key part falls out with null features
+                if (row["ts"] is None or key == (None, None) or len(g) == 0
+                        or None in key and not pt):
+                    exp = None
+                else:
+                    exp = naive_feature(
+                        p, g["ts"].to_numpy(np.int64), g[p.input_column].to_numpy(object),
+                        int(row["ts"]), buckets=g["cat"].to_numpy(object) if p.bucket else None,
+                    )
+                if not allclose_feature(row[p.output_column], exp):
+                    bad.append((rows, pt, key, row["ts"], p.output_column, row[p.output_column], exp))
+        assert not bad, f"{len(bad)} mismatches, first 5: {bad[:5]}"
+
+
+def test_raw_passthrough_int64_exact(spark):
+    """A passthrough int64 column above 2^53 (an xxhash64), nulls
+    included, leaves the raw kernel byte-exact."""
+    ev = spark.createDataFrame(
+        [(f"u{i % 3}", 1000 + i, float(i)) for i in range(40)], "user string, ts long, v double"
+    )
+    q = ev.select("user", "ts").withColumn(
+        "h", F.when(F.col("ts") % 5 == 0, None).otherwise(F.xxhash64("user", "ts"))
+    )
+    gb = GroupBy(
+        name="h64", sources=(EventSource(table="ev"),), key_columns=("user",),
+        aggregations=(Aggregation("v", Operation.COUNT, windows=(None,)),),
+    )
+    out = temporal_events(spark, gb, q, ev, mode="raw", passthrough=True)
+    got = sorted((r["user"], r["ts"], r["h"]) for r in out.collect())
+    exp = sorted((r["user"], r["ts"], r["h"]) for r in q.collect())
+    assert got == exp
+    assert any(h is not None and abs(h) > 2**53 for _, _, h in got)
